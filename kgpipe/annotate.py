@@ -2,9 +2,10 @@
 stage (structured path), the fused zero-shuffle path, and ``kgpipe.run``.
 
 ``annotate_turn`` is a pure function of (text, anchor, gazetteer, blacklist,
-config) -> {tokens, mentions, timexes} dict rows matching
-``schemas.ANNOTATED_SCHEMA``'s array elements. It reproduces, per turn
-(turn ≙ reference note / CAS):
+config) -> mention and timex dict rows whose keys are the mention / timex
+columns of ``schemas.ANNOTATION_UNION_SCHEMA`` (``extract.annotate_union``
+flattens them into that one frame; ``pair.turn_triples`` consumes them
+directly). It reproduces, per turn (turn ≙ reference note / CAS):
 
 * tokenization + last-wins begin dedup (timeline_delegator.py:82-119)
 * gazetteer all-spans lookup (DictionarySubPipe / DefaultTermConsumer)
@@ -113,11 +114,14 @@ def annotate_turn(
     blacklist,
     cfg: PipelineConfig,
     with_timexes: bool = True,
-    with_token_rows: bool = True,
+    with_token_rows=False,
 ):
     """Annotate one turn. Returns (anchor_date, tokens, mentions, timexes)
-    where the three lists hold dicts shaped like schemas.TOKEN_STRUCT /
-    MENTION_STRUCT / TIMEX_STRUCT.
+    where mentions / timexes are lists of dicts keyed like the mention /
+    timex columns of schemas.ANNOTATION_UNION_SCHEMA (``mention_idx`` /
+    ``timex_idx`` for its in_kind_idx). ``tokens`` is the raw
+    ``(tokens, newline_flags)`` pair when ``with_token_rows="raw"`` (the
+    fused triple build and the union annotate read it), else ``[]``.
 
     ``with_timexes=False`` skips timex detection+normalization entirely
     (returns an empty timex list) — the fast path for consumers that only
@@ -142,25 +146,7 @@ def annotate_turn(
         begins_sorted = [b for b, _ in token_map]
         ends_sorted = [e for _, e in token_map]
 
-    # token-row dicts are pure repackaging (~5% of per-turn CPU); callers
-    # that never read them pass False, callers that only need the raw
-    # streams (fused triple build, union annotate) pass "raw" and get
-    # (tokens, newline_flags) without the per-token dict round-trip
-    if with_token_rows == "raw":
-        token_rows = (tokens, newline_flags)
-    elif with_token_rows:
-        token_rows = [
-            {
-                "tok_idx": i,
-                "begin": token_map[i][0],
-                "end": token_map[i][1],
-                "text": tokens[i],
-                "is_newline": bool(newline_flags[i]),
-            }
-            for i in range(n)
-        ]
-    else:
-        token_rows = []
+    token_rows = (tokens, newline_flags) if with_token_rows == "raw" else []
 
     # --- timexes: detect + normalize (F6/X4/X5 live inside normalize) ---
     timex_rows = []

@@ -43,7 +43,6 @@ from .schemas import LINEAGE_SCHEMA
 
 __all__ = [
     "with_bucket",
-    "write_bucketed",
     "append_lineage",
     "completed_buckets",
     "run_with_resume",
@@ -212,13 +211,6 @@ class TableSink:
         if not os.path.exists(p):
             return None
         return self.spark.read.parquet(p)
-
-
-def write_bucketed(df: DataFrame, path: str, mode: str = "append") -> None:
-    """Write a bucket-partitioned parquet table (fallback layout identical
-    to an Iceberg bucket-transform table). Kept for direct callers; the
-    resume path goes through TableSink."""
-    df.write.mode(mode).partitionBy("bucket").parquet(path)
 
 
 def append_lineage(

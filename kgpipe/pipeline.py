@@ -1,18 +1,24 @@
 """End-to-end composition: transcripts -> triples / nodes / edges.
 
-Two equivalent execution plans (equality-tested):
+``build_annotations`` builds the structured path's ONE union frame —
+``filter_union(annotate_union(...))`` plus the W1 id window, persisted
+once — and hands out its per-kind views (mentions, timexes, with and
+without annotation ids). Every structured consumer reads those views:
+triples here, and cross-turn edges, canonical nodes and Anafora documents
+in their own modules.
+
+Two equivalent triple plans (equality-tested):
 
 * ``build_triples(..., fused=False)`` — structured: every SURVEY.md §2
-  operator is a visible DataFrame op, in the one-pass union shape (the
-  annotate stage emits mention/timex/token rows directly in the merged W1
-  schema). Plan shape — ONE hash exchange total (plan-asserted in PLANS.md):
+  operator is a visible DataFrame op over the union frame. Plan shape
+  (plan-asserted in PLANS.md):
 
       scan -> mapInPandas(annotate -> union rows)         [narrow]
         -> F1 predicate, F2 broadcast anti-join, F5       [narrow]
-        -> W1 row_number window   ── one exchange on (conv_id, turn_idx)
-        -> persist; kind splits are co-partitioned views of the cache
-        -> J1 band join + pair groupBy + token join       [zero exchanges]
-        -> instance/score mapInPandas
+        -> W1 row_number window   ── exchange on (conv_id, turn_idx)
+        -> persist; kind splits are projections of the cache
+        -> J1 band join + token join on (conv_id, turn_idx)
+        -> tlink label (narrow Arrow UDF) + instance string (JVM)
         -> union with attribution/entity/dtr projections
 
 * ``build_triples(..., fused=True)`` — one narrow mapInPandas, zero
@@ -32,28 +38,30 @@ from pyspark.sql import functions as F
 
 from .config import DEFAULT_CONFIG, PipelineConfig
 from .extract import (
-    annotate_transcripts,
-    assign_annotation_ids,
-    filter_mentions,
-    filter_timexes,
-    mentions_table,
-    timexes_table,
+    MENTION_FIELDS,
+    TIMEX_FIELDS,
+    annotate_union,
+    assign_union_ids,
+    filter_union,
 )
-from .graph import (
-    attribution_triples,
-    cross_turn_event_edges,
-    dtr_triples,
-    entity_mention_triples,
-)
+from .graph import attribution_triples, dtr_triples, entity_mention_triples
 from .pair import fused_triples, pair_window, tlink_triples_from_pairs
 
 __all__ = [
     "build_annotations",
     "build_triples",
-    "build_graph",
     "summarized_timelines",
     "ntriples_view",
 ]
+
+
+def _kind_view(union: DataFrame, kind_rank: int, idx: str, fields, ids: bool):
+    """One kind's relation as a projection of the union frame: in_kind_idx
+    renamed to the kind's own index column, plus annotation_id if asked."""
+    return union.where(F.col("kind_rank") == kind_rank).select(
+        "conv_id", "turn_idx", "anchor_date", F.col("in_kind_idx").alias(idx),
+        *fields, *(["annotation_id"] if ids else []),
+    )
 
 
 def build_annotations(
@@ -64,73 +72,40 @@ def build_annotations(
     persist: bool = True,
     timexes: bool = True,
 ):
-    """Structured intermediate tables. Returns dict with annotated /
-    mentions_raw / mentions / timexes (filtered+id'd).
+    """Structured intermediate tables, all views of ONE frame.
 
-    ``annotated`` is the expensive Arrow-UDF stage and the DAG diamonds off
-    it (mentions, timexes, and the pair->token join all consume it), so it is
-    persisted MEMORY_AND_DISK by default — otherwise Spark re-runs the
-    annotation pass once per branch (measured 5x wall on the structured
-    plan at sf0.1).
+    ``annotated`` is ``filter_union(annotate_union(...))`` followed by the
+    W1 id window (``assign_union_ids``). It is the expensive Arrow-UDF stage
+    and every view below reads it, so it is persisted MEMORY_AND_DISK by
+    default — one cache, released by ``annotated.unpersist()``. The views
+    are kind_rank projections of it: ``mentions_f`` / ``timexes_f``
+    (filtered, no annotation_id — consumers that never read ids) and
+    ``mentions`` / ``timexes`` (the same rows with annotation_id).
 
     ``timexes=False`` is the mentions-only fast path: timex detection is
-    skipped inside the Arrow UDF and the returned dict carries ONLY
-    annotated / mentions_raw / mentions_f — no timex tables and no
-    annotation ids (the W1 id window ranks mentions and timexes together,
-    so ids from a timex-free pass would disagree with the full pipeline's;
-    omitting the keys makes that misuse impossible)."""
-    if not timexes:
-        # flat mentions-only annotate (MENTION_ROWS_SCHEMA): value-identical
-        # rows to mentions_table(annotated) with ~5x less Arrow payload (no
-        # token structs / text / passthroughs cross the Python boundary).
-        # ``annotated`` stays available as a lazy plan for callers that
-        # genuinely want the nested frame in this mode.
-        from .extract import annotate_mention_rows
-
-        annotated = annotate_transcripts(
-            transcripts, gazetteer, blacklist, cfg, with_timexes=False
-        )
-        mentions_raw = annotate_mention_rows(
-            transcripts, gazetteer, blacklist, cfg
-        )
-        if persist:
-            from pyspark import StorageLevel
-
-            mentions_raw = mentions_raw.persist(StorageLevel.MEMORY_AND_DISK)
-        return {
-            "annotated": annotated,
-            "mentions_raw": mentions_raw,
-            "mentions_f": filter_mentions(mentions_raw, blacklist, cfg),
-        }
-    annotated = annotate_transcripts(
-        transcripts, gazetteer, blacklist, cfg, with_timexes=timexes
+    skipped inside the Arrow UDF, no id window runs, and the returned dict
+    carries ONLY annotated / mentions_f — the W1 window ranks mentions and
+    timexes together, so ids from a timex-free pass would disagree with
+    the full pipeline's; omitting the keys makes that misuse impossible."""
+    annotated = filter_union(
+        annotate_union(transcripts, gazetteer, blacklist, cfg, timexes=timexes),
+        blacklist, cfg,
     )
+    if timexes:
+        annotated = assign_union_ids(annotated)
     if persist:
         from pyspark import StorageLevel
 
         annotated = annotated.persist(StorageLevel.MEMORY_AND_DISK)
-    mentions_raw = mentions_table(annotated)
-    timexes_raw = timexes_table(annotated)
-    mentions_f = filter_mentions(mentions_raw, blacklist, cfg)
-    timexes_f = filter_timexes(timexes_raw)
-    # cache=persist: the W1 id window (union -> exchange -> sort -> window)
-    # otherwise re-executes once per consumer — entity triples, both pairing
-    # sides (measured 3x subtree wall at sf0.1)
-    mentions_id, timexes_id = assign_annotation_ids(
-        mentions_f, timexes_f, cache=persist
-    )
-    return {
+    out = {
         "annotated": annotated,
-        "mentions_raw": mentions_raw,
-        "timexes_raw": timexes_raw,
-        # pre-id filtered mentions: consumers that never read annotation_id
-        # (rollups, cross-turn edges, canonicalization) take this and skip
-        # the W1 window exchange entirely
-        "mentions_f": mentions_f,
-        "timexes_f": timexes_f,
-        "mentions": mentions_id,
-        "timexes": timexes_id,
+        "mentions_f": _kind_view(annotated, 0, "mention_idx", MENTION_FIELDS, False),
     }
+    if timexes:
+        out["timexes_f"] = _kind_view(annotated, 1, "timex_idx", TIMEX_FIELDS, False)
+        out["mentions"] = _kind_view(annotated, 0, "mention_idx", MENTION_FIELDS, True)
+        out["timexes"] = _kind_view(annotated, 1, "timex_idx", TIMEX_FIELDS, True)
+    return out
 
 
 def build_triples(
@@ -152,28 +127,18 @@ def build_triples(
     if fused:
         return fused_triples(transcripts, gazetteer, blacklist, cfg)
 
-    # One-pass structured shape: annotate emits mention/timex/token rows in
-    # the merged union schema, filters (F1/F2/F4/F5) and the W1 window stay
-    # visible operators, and the path pays exactly ONE exchange (the window)
-    # and ONE persist. All downstream joins key on (conv_id, turn_idx) and
-    # read co-partitioned splits of the same cached frame, so the band join,
-    # the pair groupBy and the token join add zero exchanges.
-    from pyspark import StorageLevel
-
-    from .extract import annotate_union, assign_union_ids, filter_union
-
-    union = assign_union_ids(
-        filter_union(annotate_union(transcripts, gazetteer, blacklist, cfg),
-                     blacklist, cfg)
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-    mentions_id = union.where(F.col("kind_rank") == 0)
-    timexes_id = union.where(F.col("kind_rank") == 1)
-    toks = union.where(F.col("kind_rank") == 2)
+    # One-pass structured shape: the mention, timex and token splits are
+    # co-partitioned views of build_annotations' one persisted union frame,
+    # so the path pays exactly ONE window exchange and ONE persist, and the
+    # band join, the pair groupBy and the token join add no turn shuffle.
+    ann = build_annotations(transcripts, gazetteer, blacklist, cfg)
+    mentions_id = ann["mentions"]
+    toks = ann["annotated"].where(F.col("kind_rank") == 2)
 
     # F3 (empty-doc skip) + O1 (entity gate on timex work) fall out of the
     # inner equi-join in pair_window: timexes of mention-less turns never
     # reach instance assembly or scoring.
-    pairs = pair_window(mentions_id, timexes_id)
+    pairs = pair_window(mentions_id, ann["timexes"])
     tlink = tlink_triples_from_pairs(pairs, toks, cfg)
 
     out = attribution_triples(transcripts).unionByName(
@@ -182,23 +147,6 @@ def build_triples(
     if cfg.use_dtr:
         out = out.unionByName(dtr_triples(mentions_id))
     return out.unionByName(tlink)
-
-
-def build_graph(
-    transcripts: DataFrame,
-    gazetteer,
-    blacklist,
-    cfg: PipelineConfig = DEFAULT_CONFIG,
-):
-    """Full graph materialization inputs: triples + cross-turn edges +
-    canonical nodes. Returns dict of DataFrames."""
-    from .canon import canonical_nodes  # local import: optional stage
-
-    tables = build_annotations(transcripts, gazetteer, blacklist, cfg)
-    triples = build_triples(transcripts, gazetteer, blacklist, cfg)
-    edges = cross_turn_event_edges(tables["mentions"], cfg)
-    nodes = canonical_nodes(tables["mentions"])
-    return {"triples": triples, "edges": edges, "nodes": nodes, **tables}
 
 
 _NT_LITERAL_PREDS = ("speaker-attribution", "tool-invocation")

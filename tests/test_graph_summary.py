@@ -375,8 +375,8 @@ def test_entity_episodes_gap_merge(spark):
 
 def test_cross_turn_edges_mentions_only_path_equal(spark):
     """The timex-free annotate fast path must produce byte-identical
-    cross-turn edges to the full pipeline (mentions_f is pre-id, so
-    skipping timexes cannot change it)."""
+    mentions_f rows and cross-turn edges to the full pipeline (mentions_f
+    is pre-id, so skipping timexes cannot change it)."""
     from kgpipe.fixtures import synthetic_transcripts_df
     from kgpipe.graph import cross_turn_event_edges
     from kgpipe.pipeline import build_annotations
@@ -392,7 +392,11 @@ def test_cross_turn_edges_mentions_only_path_equal(spark):
     light = build_annotations(
         t, gaz, bl, DEFAULT_CONFIG, persist=False, timexes=False
     )
-    assert set(light) == {"annotated", "mentions_raw", "mentions_f"}
+    assert set(light) == {"annotated", "mentions_f"}
+    assert full["mentions_f"].dtypes == light["mentions_f"].dtypes
+    rows_full = sorted(map(tuple, full["mentions_f"].collect()))
+    rows_light = sorted(map(tuple, light["mentions_f"].collect()))
+    assert rows_full == rows_light and rows_full
     a = sorted(
         map(tuple, cross_turn_event_edges(full["mentions_f"]).collect())
     )

@@ -80,21 +80,37 @@ def test_structured_equals_fused(corpus_df, gazetteer, blacklist):
 
 
 def test_per_turn_text_equality_invariant(spark, corpus_pdf, corpus_df, gazetteer, blacklist):
-    """Per-row invariant: the annotated table preserves every turn's text
-    byte-for-byte under stable (conv_id, turn_idx) ordering."""
+    """Per-row invariant of the union frame under stable (conv_id,
+    turn_idx) ordering: exactly one token-stream row per input turn, whose
+    stream is the in-process tokenization of that turn's text, and every
+    mention / timex surface is the turn's own text at its span."""
+    from kgpipe.score import tokens_for_mode
+    from kgpipe.text import tokenize
+
     cfg = PipelineConfig()
-    tables = build_annotations(corpus_df, gazetteer, blacklist, cfg)
-    out = (
-        tables["annotated"]
-        .select("conv_id", "turn_idx", "text")
+    annotated = build_annotations(corpus_df, gazetteer, blacklist, cfg)["annotated"]
+    toks = (
+        annotated.where(F.col("kind_rank") == 2)
+        .select("conv_id", "turn_idx", "tok_stream")
         .orderBy("conv_id", "turn_idx")
         .toPandas()
     )
     inp = corpus_pdf[["conv_id", "turn_idx", "text"]].sort_values(
         ["conv_id", "turn_idx"]
     ).reset_index(drop=True)
-    assert out["text"].tolist() == inp["text"].tolist()
-    assert list(zip(out.conv_id, out.turn_idx)) == list(zip(inp.conv_id, inp.turn_idx))
+    assert list(zip(toks.conv_id, toks.turn_idx)) == list(zip(inp.conv_id, inp.turn_idx))
+    texts = {(c, t): x or "" for c, t, x in inp.itertuples(index=False)}
+    for r in toks.itertuples(index=False):
+        tokens, _map, nl = tokenize(texts[(r.conv_id, r.turn_idx)])
+        assert r.tok_stream == "\x1f".join(tokens_for_mode(tokens, nl, "dtr"))
+
+    spans = annotated.where(F.col("kind_rank") < 2).select(
+        "conv_id", "turn_idx", "kind_rank", "begin", "end", "surface"
+    ).collect()
+    assert any(r.kind_rank == 0 for r in spans) and any(r.kind_rank == 1 for r in spans)
+    for r in spans:
+        covered = texts[(r.conv_id, r.turn_idx)][r.begin:r.end]
+        assert r.surface == (covered.replace("\n", "") if r.kind_rank == 0 else covered)
 
 
 def test_annotation_id_stability(corpus_df, gazetteer, blacklist):

@@ -7,6 +7,9 @@ from __future__ import annotations
 
 import random
 
+from hypothesis import given, settings
+from hypothesis import strategies as st
+
 from kgpipe.timex import TIMEX_PATTERNS, _DIGIT_RE, _QUICK_KEYS, detect_timexes
 
 
@@ -53,8 +56,12 @@ _WORDS = [
     # mod-in-span words, worded clocks) and their everyday near-misses
     "or", "so", "up", "to", "1/2", "2", "part", "earlier", "later",
     "noon", "for", "some", "today", "group", "into", "p.m.", "weeks",
+    # weekday words, bare and comma-glued, for the "[weekday] , [date]"
+    # composition's detached-comma reach
+    "monday", "tue", "wednesday", "thurs", "sunday", "friday,", ",",
 ]
 _SEPS = [" ", "  ", " \n ", "\t", "   "]
+_PUNCT = [",", ".", ";", ":", "-", "/", "(", ")", "'", "?"]
 
 
 def test_region_scan_equals_full_scan_seeded():
@@ -67,6 +74,41 @@ def test_region_scan_equals_full_scan_seeded():
             if i < n - 1:
                 text += rng.choice(_SEPS)
         assert detect_timexes(text) == _detect_full_scan(text), repr(text)
+
+
+_SEP = st.sampled_from(_SEPS + [""])
+# a date-shaped phrase from the patterns' own vocabularies: optional
+# weekday, optional punctuation, optional month word, then a number — the
+# compositions whose left reach the digit region must cover
+_PHRASE = st.tuples(
+    st.sampled_from(["", "friday", "Mon", "tuesday", "sunday,"]), _SEP,
+    st.sampled_from(["", ",", ";", "."]), _SEP,
+    st.sampled_from(["", "march", "sept.", "of", "the"]), _SEP,
+    st.sampled_from(["5", "5th", "2021", "3/5/2021", "2021-03-04", "1990s"]),
+).map("".join)
+_CHUNK = st.one_of(st.sampled_from(_WORDS + _PUNCT), _PHRASE)
+
+
+@settings(max_examples=600, deadline=None)
+@given(st.lists(st.tuples(_CHUNK, _SEP), max_size=10))
+def test_region_scan_equals_full_scan_property(stream):
+    """Gated detection == full scan over random streams of the pattern
+    vocabulary plus punctuation; the empty separator glues neighbours
+    ("friday," / "5,")."""
+    text = "".join(w + s for w, s in stream)
+    assert detect_timexes(text) == _detect_full_scan(text), repr(text)
+
+
+def test_weekday_date_detached_comma():
+    """A comma standing alone between the weekday and the date still
+    composes one weekday_date — the digit region must reach three word
+    gaps left of the first digit, not two."""
+    for text in ("friday , march 5", "on friday  ,  march 5th , 2021 ok"):
+        got = detect_timexes(text)
+        assert got == _detect_full_scan(text), repr(text)
+        assert [t["kind"] for t in got] == ["weekday_date"], got
+    got = detect_timexes("friday , march 5")
+    assert got[0]["surface"] == "friday , march 5"
 
 
 def test_region_scan_handpicked_boundaries():

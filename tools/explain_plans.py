@@ -5,9 +5,9 @@ Checks (each is a hard assertion, so this doubles as a regression gate):
 
 1. fused path — zero Exchange nodes: the 10^12-turn extraction is one
    narrow mapInPandas over the scan.
-2. structured path — the only wide operators are keyed on
-   (conv_id, turn_idx); blacklist F2 is a BroadcastHashJoin (left anti),
-   never a shuffled join.
+2. structured path — one annotate pass under one cache, and the only
+   wide operator is the W1 window exchange keyed on (conv_id, turn_idx);
+   blacklist F2 is a BroadcastHashJoin (left anti), never a shuffled join.
 3. column pruning — the transcripts scan reads only the 6 input columns
    even though downstream produces 9+ (ReadSchema check), and a
    predicate on the derived input pushes into the parquet scan
@@ -118,29 +118,30 @@ def main() -> int:
     keyed = keyed_exchange_args(p)
     for ln in keyed:
         assert "conv_id" in ln, f"exchange not keyed on conv_id: {ln}"
-    # one-pass union shape: exactly TWO keyed shuffles, both on
-    # (conv_id, turn_idx) — (a) the W1 window exchange inside the annotate
-    # cache (runs once at materialization; the band join / token join /
-    # mention-timex branches all read the cached result), and (b) the pair
-    # rollup's exchange after it: an AQE-wrapped cached plan reports
-    # UnknownPartitioning to consumers, so Catalyst cannot prove the cache
-    # is already clustered on the key (Spark cache+AQE behavior). The pair
-    # rollup shuffle moves partially-aggregated pair rows, not turns.
+    # one-pass union shape: exactly ONE keyed shuffle, the W1 window
+    # exchange inside the annotate cache on (conv_id, turn_idx). It runs
+    # once at materialization; the band join, the token join and the
+    # mention / timex / token splits all read the cached result, and the
+    # small sides of both joins are broadcast.
     n_shuffles = len(keyed)
-    assert n_shuffles <= 2, (
+    assert n_shuffles == 1, (
         f"structured plan has {n_shuffles} hash exchanges; the union shape "
-        "needs at most two (cache W1 window + pair rollup)"
+        "needs exactly one (the cache's W1 window)"
     )
+    # every split reads the one cached frame: the annotate MapInPandas is a
+    # single plan node however many cache scans print it
+    n_annotate = len(set(re.findall(r"MapInPandas \((\d+)\)", p)))
+    assert n_annotate == 1, f"structured plan has {n_annotate} annotate passes"
     sections.append((
         "structured extraction (build_triples fused=False)",
         p,
         [
             "BroadcastHashJoin LeftAnti for blacklist: yes",
-            f"hash exchanges: {n_shuffles}, all keyed on (conv_id, turn_idx) "
-            "— one materializes the annotate cache (W1 window), one is the "
-            "pair rollup over map-side partially-aggregated rows (the "
-            "AQE-wrapped cache hides its partitioning from consumers, so "
-            "this exchange cannot be elided by Catalyst)",
+            f"annotate MapInPandas nodes: {n_annotate}, under one "
+            "InMemoryRelation read by every split",
+            f"hash exchanges: {n_shuffles}, keyed on (conv_id, turn_idx) "
+            "— it materializes the annotate cache (W1 window); the band "
+            "join and the token join broadcast their small sides",
         ],
     ))
 
